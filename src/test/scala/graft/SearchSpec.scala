@@ -290,6 +290,121 @@ class SearchSpec extends SparkSpec {
     assert(m(4L) == ("b2:z", false))
   }
 
+  private def memoDir(): String =
+    java.nio.file.Files.createTempDirectory("s12_memo").toString + "/memo"
+
+  private def memoFiles(dir: String): Set[String] = {
+    val d = new java.io.File(dir)
+    if (!d.exists) Set.empty
+    else d.list().filter(_.endsWith(".parquet")).toSet
+  }
+
+  /** A compute tagging each response, recording every key it sees. */
+  private def recording(tag: String,
+                        seen: collection.mutable.Buffer[String])
+                       (keys: org.apache.spark.sql.DataFrame) = {
+    seen ++= keys.collect().map(_.getString(0))
+    keys.withColumn("response", concat(lit(tag + ":"), col("key")))
+  }
+
+  private def served(out: org.apache.spark.sql.DataFrame) =
+    out.collect().map(r => r.getLong(0) -> (r.getString(2), r.getBoolean(3)))
+      .toMap
+
+  test("S12 memo dir hit: a local batch is a LocalTableScan, no append") {
+    import org.apache.spark.sql.execution.LocalTableScanExec
+    val dir = memoDir()
+    val seen = collection.mutable.Buffer[String]()
+    served(graft.core.Serving.serveCachedDir(
+      Seq((1L, "x"), (2L, "y")).toDF("request_id", "key"), dir,
+      recording("b1", seen)))
+    val files = memoFiles(dir)
+    assert(files.size == 1, "one file per batch with misses")
+    val hit = graft.core.Serving.serveCachedDir(
+      Seq((3L, "x")).toDF("request_id", "key"), dir, recording("b2", seen))
+    // folded on the driver: collecting it runs no Spark job
+    assert(hit.queryExecution.executedPlan.isInstanceOf[LocalTableScanExec],
+      hit.queryExecution.executedPlan.toString)
+    assert(served(hit) == Map(3L -> ("b1:x", true)))
+    assert(seen.toList.sorted == List("x", "y"), "a hit never computes")
+    assert(memoFiles(dir) == files, "no append for an all-hit batch")
+  }
+
+  test("S12 memo dir: duplicate keys and a hit/miss mix compute each novel key once") {
+    val dir = memoDir()
+    val seen = collection.mutable.Buffer[String]()
+    graft.core.Serving.serveCachedDir(Seq((0L, "a")).toDF("request_id", "key"),
+      dir, recording("b1", seen)).collect()
+    seen.clear()
+    // a distributed batch (no local relation): a a b c b c
+    val reqs = spark.range(6).select(col("id").as("request_id"),
+      element_at(array(Seq("a", "a", "b", "c", "b", "c").map(lit): _*),
+        (col("id") + 1).cast("int")).as("key"))
+    val out = graft.core.Serving.serveCachedDir(reqs, dir, recording("b2", seen))
+    assert(seen.toList.sorted == List("b", "c"))
+    assert(out.queryExecution.optimizedPlan.collect {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
+      case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a
+    }.isEmpty, "the answer is a projection of the requests, not a join")
+    assert(served(out) == Map(
+      0L -> ("b1:a", true), 1L -> ("b1:a", true), 2L -> ("b2:b", false),
+      3L -> ("b2:c", false), 4L -> ("b2:b", false), 5L -> ("b2:c", false)))
+  }
+
+  test("S12 memo dir: the index follows the directory") {
+    val dir = memoDir()
+    val seen = collection.mutable.Buffer[String]()
+    def serve(id: Long, key: String, tag: String) = served(
+      graft.core.Serving.serveCachedDir(Seq((id, key)).toDF("request_id", "key"),
+        dir, recording(tag, seen)))(id)
+    assert(serve(1L, "x", "b1") == ("b1:x", false))
+    assert(serve(2L, "x", "b2") == ("b1:x", true))
+    // deleting the memo makes a stored key a miss again
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    assert(serve(3L, "x", "b3") == ("b3:x", false))
+    // a file another writer adds is served as a hit, with its bytes
+    Seq(("ext", "ext-bytes")).toDF("key", "response")
+      .write.mode("append").parquet(dir)
+    assert(serve(4L, "ext", "b4") == ("ext-bytes", true))
+    assert(seen.toList == List("x", "x"))
+  }
+
+  test("S12 memo dir: a relative and an absolute spelling share one memo") {
+    val rel = s"target/s12_memo_${java.util.UUID.randomUUID}"
+    val abs = new java.io.File(rel).getAbsolutePath
+    val seen = collection.mutable.Buffer[String]()
+    try {
+      val b1 = graft.core.Serving.serveCachedDir(
+        Seq((1L, "x")).toDF("request_id", "key"), rel, recording("rel", seen))
+      assert(served(b1) == Map(1L -> ("rel:x", false)))
+      val b2 = graft.core.Serving.serveCachedDir(
+        Seq((2L, "x"), (3L, "y")).toDF("request_id", "key"), abs,
+        recording("abs", seen))
+      assert(served(b2) == Map(2L -> ("rel:x", true), 3L -> ("abs:y", false)))
+      val b3 = graft.core.Serving.serveCachedDir(
+        Seq((4L, "y")).toDF("request_id", "key"), rel, recording("rel", seen))
+      assert(served(b3) == Map(4L -> ("abs:y", true)))
+      assert(seen.toList == List("x", "y"))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(abs))
+  }
+
+  test("S12 memo dir: serving batches leave no cached or checkpointed blocks") {
+    val dir = memoDir()
+    val seen = collection.mutable.Buffer[String]()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    // the answers stay referenced, so no block they pin can be
+    // garbage-collected away before the check
+    val answers = (1 to 4).map { i =>
+      val out = graft.core.Serving.serveCachedDir(
+        Seq((i.toLong, s"k${i % 2}"), (10L + i, s"n$i")).toDF("request_id", "key"),
+        dir, recording(s"b$i", seen))
+      out.collect()
+      out
+    }
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty)
+    java.lang.ref.Reference.reachabilityFence(answers)
+  }
+
   test("subnetFromSeeds leaves a caller-owned edge cache in place") {
     import org.apache.spark.storage.StorageLevel
     // caller persists at a NON-default level: an unconditional persist
